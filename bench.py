@@ -48,12 +48,6 @@ def main() -> None:
     # same final emission set, half the micro-batch machinery; tests keep
     # the full 4-batch replay). Overridable from the environment.
     os.environ.setdefault("SPARK_GRAFT_STREAM_MFPT", "2")
-    # 355 queries' session-cached artifacts (localCheckpoint blocks) live
-    # in ONE JVM for the whole run: at the default 8g heap the storage
-    # region starts evicting late in the suite and cache-dependent rows
-    # (x2_semdedup_probe 6s -> 47s, measured) pay silent re-derivation +
-    # GC. Same lever as tools/bench_scale.py (24g there for sf1).
-    os.environ.setdefault("SPARK_DRIVER_MEM", "20g")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import lru_cache
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -92,13 +93,16 @@ def is_float(v) -> bool:
         return False
 
 
-def is_time(v) -> bool:
-    """Time-only: parsing with two different default DATES yields both
-    defaults' Y/M/D back (the value supplied no date part)."""
-    if _duparse is None:
-        return False
+# The dateutil probes depend on str(value) alone, so each is cached on
+# that string: a sample that repeats a value parses it once. Keying on the
+# string keeps 5 and 5.0 apart. Bounded, so a long-lived process holds at
+# most this many strings per probe.
+_PROBE_CACHE = 1 << 14
+
+
+@lru_cache(maxsize=_PROBE_CACHE)
+def _is_time_s(s: str) -> bool:
     try:
-        s = str(v)
         v1 = _duparse(s, default=_D1)
         v2 = _duparse(s, default=_D2)
         return (
@@ -109,14 +113,9 @@ def is_time(v) -> bool:
         return False
 
 
-def is_date(v) -> bool:
-    """Date-only: parsing with two default TIMES yields both defaults'
-    H/M/S back; additionally (reference fallback, core.py:605-606) a value
-    whose own time part is exactly midnight counts as a date."""
-    if _duparse is None:
-        return False
+@lru_cache(maxsize=_PROBE_CACHE)
+def _is_date_s(s: str) -> bool:
     try:
-        s = str(v)
         v1 = _duparse(s, default=_D1_DATE)
         v2 = _duparse(s, default=_D2_DATE)
         if (
@@ -129,14 +128,29 @@ def is_date(v) -> bool:
         return False
 
 
-def is_datetime(v) -> bool:
-    if _duparse is None:
-        return False
+@lru_cache(maxsize=_PROBE_CACHE)
+def _is_datetime_s(s: str) -> bool:
     try:
-        s = str(v)
         return _duparse(s, default=_D1) != _D1 and _duparse(s, default=_D2) != _D2
     except (ValueError, OverflowError, TypeError):
         return False
+
+
+def is_time(v) -> bool:
+    """Time-only: parsing with two different default DATES yields both
+    defaults' Y/M/D back (the value supplied no date part)."""
+    return _duparse is not None and _is_time_s(str(v))
+
+
+def is_date(v) -> bool:
+    """Date-only: parsing with two default TIMES yields both defaults'
+    H/M/S back; additionally (reference fallback, core.py:605-606) a value
+    whose own time part is exactly midnight counts as a date."""
+    return _duparse is not None and _is_date_s(str(v))
+
+
+def is_datetime(v) -> bool:
+    return _duparse is not None and _is_datetime_s(str(v))
 
 
 @dataclass

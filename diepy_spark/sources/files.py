@@ -46,9 +46,10 @@ def delimiter_for(path: str, default: str = ",") -> str:
     return default
 
 
-def extract_zip_members(path: str) -> list[str]:
-    """Extract the delimited members of a ``.zip`` archive to a scratch dir
-    and return their paths.
+def extract_zip_members(path: str, out: str) -> list[str]:
+    """Extract the delimited members of a ``.zip`` archive into the scratch
+    dir ``out`` and return their paths. The caller removes ``out`` once the
+    scan has run (DiepyContext.import_file does, after the append).
 
     The reference's regex admits ``x.csv.zip`` (core.py:18-20) but its
     reader opens the raw bytes — zip import is effectively dead there; we
@@ -56,10 +57,8 @@ def extract_zip_members(path: str) -> list[str]:
     archive is expanded once driver-side (same single-stream bound as .gz);
     at 100 TB the answer is "don't ship zip", and the expansion makes the
     extracted members splittable plain text for the actual scan."""
-    import tempfile
     import zipfile
 
-    out = tempfile.mkdtemp(prefix="diepy-zip-")
     with zipfile.ZipFile(path) as zf:
         members = [
             m
@@ -89,7 +88,7 @@ def _needs_multiline(spark: SparkSession, src: str | list[str]) -> bool:
 
 def read_untyped_csv(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     delimiter: str = ",",
     header: bool = True,
     multiline: bool | str = "auto",
@@ -104,12 +103,12 @@ def read_untyped_csv(
     100 TB import that is the difference between a single-core parse and a
     full-cluster one. Pass multiline=True/False to skip the probe when the
     producer is known. Gzip decompresses transparently by extension (a
-    single stream per file either way); .zip archives are expanded to
-    scratch first (extract_zip_members) since Hadoop input streams can't
-    unzip."""
-    src = extract_zip_members(path) if path.lower().endswith(".zip") else path
+    single stream per file either way). Hadoop input streams can't unzip:
+    pass the members extract_zip_members wrote instead of a .zip path.
+
+    A zero-byte file yields a frame with no columns."""
     if multiline == "auto":
-        multiline = _needs_multiline(spark, src)
+        multiline = _needs_multiline(spark, path)
     df = (
         spark.read.option("header", header)
         .option("sep", delimiter)
@@ -117,7 +116,7 @@ def read_untyped_csv(
         .option("quote", '"')
         .option("escape", '"')
         .option("mode", "PERMISSIVE")
-        .csv(src)
+        .csv(path)
     )
     fixed = normalize_headers(list(df.columns))
     return df.toDF(*fixed)

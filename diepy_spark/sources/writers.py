@@ -67,30 +67,22 @@ def write_csv(
     if zip and not path.endswith(".gz"):
         path += ".gz"
     compressed = path.endswith(".gz")
-    sep = delimiter_for(path)
-    lsep = _line_sep(unix, windows)
     rendered = render_for_export(df)
-
-    writer = (
-        rendered.write.option("header", True)
-        .option("sep", sep)
-        .option("lineSep", lsep)
-        .option("emptyValue", "")
-        .option("nullValue", "")
-        .mode("overwrite")
+    # escape='"' doubles an embedded quote (RFC 4180), which is what
+    # read_untyped_csv expects; Spark's default escape is a backslash
+    options = dict(
+        header=True, sep=delimiter_for(path), lineSep=_line_sep(unix, windows),
+        escape='"', emptyValue="", nullValue="",
+        compression="gzip" if compressed else "none",
     )
-    if compressed:
-        writer = writer.option("compression", "gzip")
 
     if not single_file:
-        writer.csv(path)
+        rendered.write.options(**options).mode("overwrite").csv(path)
         return path
 
     tmp = tempfile.mkdtemp(prefix="diepy-export-", dir=os.path.dirname(os.path.abspath(path)) or ".")
     try:
-        rendered.coalesce(1).write.options(
-            header=True, sep=sep, lineSep=lsep, emptyValue="", nullValue=""
-        ).option("compression", "gzip" if compressed else "none").mode("overwrite").csv(tmp)
+        rendered.coalesce(1).write.options(**options).mode("overwrite").csv(tmp)
         part = glob.glob(os.path.join(tmp, "part-*"))[0]
         shutil.move(part, path)
     finally:
@@ -103,14 +95,14 @@ def write_xlsx(df: DataFrame, path: str, sheet_name: str, max_rows: int = 1_000_
     in an existing workbook (core.py:338-358, quirk Q10 preserved).
 
     Driver-bound by design (xlsx is not a distributed format); guarded by
-    max_rows so a cluster-scale table can't flatten the driver."""
-    n = df.count()
-    if n > max_rows:
+    max_rows so a cluster-scale table can't flatten the driver. One job
+    collects at most max_rows + 1 rows; the extra row trips the guard."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
         raise ValueError(
-            f"xlsx export is driver-bound; table has {n} rows > guard {max_rows}. "
-            "Export to CSV/parquet instead."
+            f"xlsx export is driver-bound; table has more than {max_rows} rows "
+            "(the guard). Export to CSV/parquet instead."
         )
-    pdf = df.toPandas()
     rows = [list(pdf.columns)] + [
         [v if not (isinstance(v, float) and v != v) else None for v in row]
         for row in pdf.itertuples(index=False, name=None)

@@ -2,9 +2,13 @@
 randomized cell streams stressing type picking, demotion, nullability, and
 width tracking. Pure driver-side (ColumnSpec is plain Python) — fast."""
 
+from datetime import datetime
+from unittest import mock
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from diepy_spark.functions import inference
 from diepy_spark.functions.inference import (
     VARCHAR_BUCKETS,
     ColumnSpec,
@@ -100,3 +104,39 @@ def test_all_int_columns_never_demote(values):
     else:
         spec = observe_all(values)
         assert spec.type == "int"
+
+
+# Excel cells arrive as Python numbers and datetimes, CSV cells as strings;
+# the pool mixes both so equal str() forms of different types meet in one
+# cache
+times = st.times().map(lambda t: t.isoformat())
+stamps = st.datetimes(min_value=datetime(1900, 1, 1)).map(lambda d: d.isoformat(sep=" "))
+raw_cells = st.one_of(
+    cells, times, stamps, st.integers(-10**6, 10**6),
+    st.floats(allow_nan=False, allow_infinity=False, width=32),
+    st.datetimes(min_value=datetime(1900, 1, 1)),
+)
+
+_CACHED_PROBES = ("_is_date_s", "_is_time_s", "_is_datetime_s")
+
+
+def _fold(values):
+    spec = ColumnSpec("c")
+    for v in values:
+        spec.observe(v)
+    return (spec.type, spec.nullable, spec.length, spec.min_value, spec.max_value)
+
+
+@given(st.lists(raw_cells, min_size=1, max_size=8).flatmap(
+    lambda pool: st.lists(st.sampled_from(pool), min_size=1, max_size=60)))
+@settings(max_examples=300, deadline=None)
+def test_cached_fold_matches_uncached(values):
+    """Cell lists with repeated values: the fold through the cached dateutil
+    probes ends in the same ColumnSpec as a fold calling the uncached
+    probes for every cell."""
+    got = _fold(values)
+    with mock.patch.multiple(
+        inference, **{n: getattr(inference, n).__wrapped__ for n in _CACHED_PROBES}
+    ):
+        ref = _fold(values)
+    assert got == ref

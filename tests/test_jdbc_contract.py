@@ -111,6 +111,23 @@ def test_append_batches_at_1000(backend):
     assert "truncate" not in w.opts
 
 
+@pytest.mark.parametrize("url", ["jdbc:duckdb:x.duckdb", "jdbc:postgresql://db/x"])
+def test_append_keeps_partitions_by_default(url):
+    """No cap unless the caller asks: one connection per partition, a
+    file-backed DuckDB included (it takes parallel appends)."""
+    log = []
+    JdbcBackend(FakeSpark(log), url).append(FakeDF(log), "people")
+    (w,) = log
+    assert "numPartitions" not in w.opts
+
+
+def test_explicit_num_partitions_sets_the_cap(backend):
+    b, log = backend
+    b.append(FakeDF(log), "people", num_partitions=3)
+    (w,) = log
+    assert w.opts["numPartitions"] == 3
+
+
 def test_truncate_load_uses_truncate_overwrite(backend):
     """K3: truncate-then-load must be Spark's truncate=True overwrite —
     delete-all + reload, never drop/recreate (preserves grants/indexes,

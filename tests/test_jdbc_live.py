@@ -7,9 +7,10 @@ core.py:112-151,205-213).
 
 Activates only when session.find_jdbc_jars() discovers a DuckDB driver
 jar in a local artifact cache (the Spark distro ships none); skipped
-with a reason otherwise. DuckDB is a single-writer engine, so writes go
-through one partition (`num_partitions=1`) — the same single-connection
-shape as the reference's executemany loop.
+with a reason otherwise. The backend tests write through one partition
+(`num_partitions=1`) — the same single-connection shape as the
+reference's executemany loop; the import tests keep the default, one
+connection per partition.
 """
 
 import os
@@ -113,3 +114,52 @@ def test_live_partitioned_read_matches_single(spark, backend):
     exp = backend.read_table("wide_t", partition_column="v", num_partitions=3)
     assert exp.rdd.getNumPartitions() == 3
     assert exp.count() == 500
+
+
+@pytest.fixture()
+def jdbc_ctx(spark, tmp_path):
+    from diepy_spark.context import DiepyContext
+
+    ini = tmp_path / "diepy.ini"
+    ini.write_text(f"[servers]\nduck = jdbc:duckdb:{tmp_path}/ctx.db\n")
+    return DiepyContext(spark, "duck", config=str(ini))
+
+
+def test_live_import_returns_observed_row_count(jdbc_ctx, tmp_path):
+    """import_file's count is observed during the JDBC append (no second
+    scan): it must equal the rows the database received, on create,
+    append and truncate-load, for csv and for each xlsx sheet."""
+    from diepy_spark.sources import xlsx_lite
+
+    src = tmp_path / "t.csv"
+    src.write_text("a,b\n" + "".join(f"{i},v{i}\n" for i in range(1500)))
+    assert jdbc_ctx.import_file(str(src)) == 1500
+    assert jdbc_ctx.import_file(str(src)) == 1500
+    assert jdbc_ctx.backend.read_table("t").count() == 3000
+    assert jdbc_ctx.import_file(str(src), truncate=True) == 1500
+    assert jdbc_ctx.backend.read_table("t").count() == 1500
+
+    book = tmp_path / "book.xlsx"
+    xlsx_lite.write_workbook(str(book), {
+        "one": [["n"]] + [[i] for i in range(7)],
+        "two": [["s"]] + [[f"x{i}"] for i in range(5)],
+    })
+    assert jdbc_ctx.import_file(str(book)) == 12
+    assert jdbc_ctx.backend.read_table("one").count() == 7
+
+
+def test_live_empty_csv_rejected(spark, jdbc_ctx, tmp_path):
+    from diepy_spark.context import DiepyContext
+
+    empty = tmp_path / "empty.csv"
+    empty.write_text("")
+    with pytest.raises(ValueError, match="empty.csv"):
+        jdbc_ctx.import_file(str(empty))
+    assert not jdbc_ctx.backend.table_exists("empty")
+    lenient = DiepyContext(spark, "duck", config=str(tmp_path / "diepy.ini"), lenient=True)
+    assert lenient.import_file(str(empty)) is None
+
+    header = tmp_path / "header.csv"
+    header.write_text("a,b\n")
+    assert jdbc_ctx.import_file(str(header)) == 0
+    assert jdbc_ctx.backend.read_table("header").count() == 0

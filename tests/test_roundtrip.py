@@ -5,6 +5,7 @@ and filename decoration."""
 import csv
 import gzip
 import os
+import tempfile
 from datetime import datetime
 
 import pytest
@@ -87,7 +88,7 @@ def test_truncate_vs_append(ctx, basic_file):
     assert ctx.backend.read_table("basic").count() == 3
 
 
-def test_zip_import(ctx, basic_file, tmp_path):
+def test_zip_import(ctx, basic_file, tmp_path, monkeypatch):
     """S2: x.csv.zip imports like x.csv (extracted to scratch — Hadoop
     streams can't unzip). The reference admits the extension but reads raw
     bytes (core.py:18-20 vs 237); this path actually works."""
@@ -96,11 +97,94 @@ def test_zip_import(ctx, basic_file, tmp_path):
     src = tmp_path / "basic.csv.zip"
     with zipfile.ZipFile(src, "w") as zf:
         zf.write(basic_file, "basic.csv")
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
     n = ctx.import_file(str(src))
     assert n == 3
     df = ctx.backend.read_table("basic")
     assert dict(df.dtypes)["int"] == "smallint"
     assert df.count() == 3
+    # the extracted members are removed once the append has read them
+    assert not [e for e in os.listdir(scratch) if e.startswith("diepy-zip-")]
+
+
+def test_export_csv_doubles_embedded_quotes(ctx, tmp_path):
+    """RFC 4180: a quote inside a quoted cell is written doubled, which is
+    how read_untyped_csv reads it back (a backslash escape would not be)."""
+    src = tmp_path / "quotes.csv"
+    src.write_text('id,note\n1,"x ""y"" z"\n2,"a, ""b""\nc"\n3,back\\slash\n')
+    ctx.import_file(str(src))
+    out = tmp_path / "out.csv"
+    ctx.export_table("quotes", str(out), unix=True)
+    assert '1,"x ""y"" z"\n' in out.read_text()
+    ctx.import_file(str(out), table="again")
+    want = {1: 'x "y" z', 2: 'a, "b"\nc', 3: "back\\slash"}
+    for t in ("quotes", "again"):
+        assert {r["id"]: r["note"] for r in ctx.backend.read_table(t).collect()} == want
+
+
+def test_empty_csv_rejected_header_only_imports(ctx, tmp_path, spark):
+    """A zero-byte file has no header to infer from: ValueError naming the
+    file, or with lenient=True a logged skip. A header-only file is a
+    0-row table."""
+    empty = tmp_path / "empty.csv"
+    empty.write_text("")
+    with pytest.raises(ValueError, match="empty.csv"):
+        ctx.import_file(str(empty))
+    assert not ctx.backend.table_exists("empty")
+    lenient = DiepyContext(spark, "test", config=str(tmp_path / "diepy.ini"), lenient=True)
+    assert lenient.import_file(str(empty)) is None
+
+    header = tmp_path / "header.csv"
+    header.write_text("a,b\n")
+    assert ctx.import_file(str(header)) == 0
+    assert ctx.backend.read_table("header").columns == ["a", "b"]
+    assert ctx.backend.read_table("header").count() == 0
+
+
+def _python_stages(spark, group: str) -> list[int]:
+    """Stages of the group's jobs whose RDD graph runs Python code."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    return [
+        sid
+        for job in sc.statusTracker().getJobIdsForGroup(group)
+        for sid in sc.statusTracker().getJobInfo(job).stageIds
+        if "Python" in graph.makeDotFile(store.operationGraphForStage(sid))
+    ]
+
+
+def test_quote_free_import_job_budget(ctx, spark, tmp_path):
+    """A quote-free CSV into the warehouse runs five jobs: quote census,
+    header, inference sample, the new table's schema-only parquet file and
+    the append. The schema-only file is written from an empty RDD, so no
+    Python worker starts, and the row count comes from the append instead
+    of a sixth counting job."""
+    src = tmp_path / "plain.csv"
+    src.write_text("a,b,c\n" + "".join(f"{i},x{i},2024-01-{i % 28 + 1:02d}\n" for i in range(200)))
+    sc = spark.sparkContext
+    group = "import-budget"
+    sc.setJobGroup(group, "quote-free import")
+    try:
+        assert ctx.import_file(str(src)) == 200
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    assert _python_stages(spark, group) == []
+
+
+def test_write_xlsx_guards_max_rows(spark, tmp_path):
+    from diepy_spark.sources.writers import write_xlsx
+
+    df = spark.createDataFrame([(i,) for i in range(3)], "n int")
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        write_xlsx(df, str(tmp_path / "over.xlsx"), "t", max_rows=2)
+    assert not (tmp_path / "over.xlsx").exists()
+    write_xlsx(df, str(tmp_path / "at.xlsx"), "t", max_rows=3)
+    assert (tmp_path / "at.xlsx").exists()
 
 
 def test_zip_without_delimited_members_rejected(ctx, tmp_path):

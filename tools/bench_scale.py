@@ -123,10 +123,6 @@ def main() -> None:
     if not os.path.isdir(big):
         raise SystemExit(f"{big} missing - run tools/make_sf1.py first")
 
-    # 10x the data in one local JVM: the default 8g heap dies in
-    # GCLocker retries under the iterative graph queries at sf1.
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
-
     from diepy_spark.session import get_spark
 
     import __spark_entry__ as entrymod

@@ -24,7 +24,6 @@ def main() -> int:
     fam = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     os.environ.setdefault("SPARK_GRAFT_STREAM_MFPT", "2")
-    os.environ.setdefault("SPARK_DRIVER_MEM", "20g")
 
     import __spark_entry__ as entrymod
 
